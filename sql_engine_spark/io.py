@@ -51,7 +51,7 @@ def count_cached(sf_dir: str, name: str, tag: str, compute) -> int:
     distinguishes filtered counts (e.g. 'vec_id>=10') from the full
     table; `compute` runs once per (process, dataset). The key folds
     the dataset fingerprint so in-place regeneration invalidates."""
-    from sql_engine_spark.operators.dedup import dataset_fingerprint
+    from sql_engine_spark.sharedcost import dataset_fingerprint
 
     key = (
         os.path.abspath(sf_dir),

@@ -63,54 +63,6 @@ def release_cached() -> int:
     return n
 
 
-# Temp dirs created by the shared-build caches (shingle/pHash/kNN/
-# triangle/expiry). Registered for one atexit sweep so repeated
-# processes don't accumulate derived corpus copies in tmp (r8 advice).
-_TMP_DIRS: list[str] = []
-
-
-def tracked_tmpdir(prefix: str) -> str:
-    """mkdtemp whose tree is removed at interpreter exit. The shared
-    builds write immutable derived parquet here; within a process the
-    dirs must outlive every consumer (the caches hand out scans of
-    them), so cleanup is process-exit, not per-query."""
-    import atexit
-    import shutil
-    import tempfile
-
-    if not _TMP_DIRS:
-        atexit.register(
-            lambda: [shutil.rmtree(d, ignore_errors=True) for d in _TMP_DIRS]
-        )
-    d = tempfile.mkdtemp(prefix=prefix)
-    _TMP_DIRS.append(d)
-    return d
-
-
-def dataset_fingerprint(sf_dir: str, table: str) -> tuple[int, int]:
-    """(total_bytes, max_mtime_ns) of `{sf_dir}/{table}.parquet` (file or
-    directory tree). Folded into every shared-build cache key so a
-    dataset regenerated IN PLACE invalidates the materialized derived
-    relations instead of serving stale fingerprints (r8 advice)."""
-    import os
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    total, mtime = 0, 0
-    try:
-        if os.path.isdir(path):
-            for root, _dirs, files in os.walk(path):
-                for fn in files:
-                    st = os.stat(os.path.join(root, fn))
-                    total += st.st_size
-                    mtime = max(mtime, st.st_mtime_ns)
-        else:
-            st = os.stat(path)
-            total, mtime = st.st_size, st.st_mtime_ns
-    except OSError:
-        pass
-    return (total, mtime)
-
-
 def cache_mark() -> int:
     """Snapshot the persist-tracking list so a scoped builder can later
     release ONLY its own intermediates (`release_since`) without
@@ -319,11 +271,6 @@ def hashed_shingle_sets(
     )
 
 
-# (abspath(sf_dir), shingle_k) -> parquet path, process-local (the SURVEY 7.6
-# shared-build template, same discipline as graph._KNN_CACHE).
-_HS_CACHE: dict[tuple, str] = {}
-
-
 def shingle_hs_shared(spark, sf_dir: str, *, shingle_k: int = 3) -> DataFrame:
     """The hashed-shingle-set relation over `{sf_dir}/documents`, built
     ONCE per (process, dataset, k) and materialized to parquet. Twelve
@@ -337,36 +284,25 @@ def shingle_hs_shared(spark, sf_dir: str, *, shingle_k: int = 3) -> DataFrame:
     import os
 
     from sql_engine_spark.io import load
+    from sql_engine_spark.sharedcost import materialize
 
-    key = (
-        os.path.abspath(sf_dir),
-        dataset_fingerprint(sf_dir, "documents"),
-        shingle_k,
-    )
-    path = _HS_CACHE.get(key)
-    if path is None or not os.path.isdir(path):
-        import time
-
-        from sql_engine_spark.sharedcost import record
-
-        t0 = time.time()
+    def build(root: str) -> None:
         docs = load(spark, sf_dir, "documents")
-        mark = cache_mark()
         hs = hashed_shingle_sets(docs, "doc_id", "text", shingle_k=shingle_k)
-        path = os.path.join(tracked_tmpdir("sqe_hs_"), "hs.parquet")
         # Write one file per core: a single small parquet file would hand
         # every consumer a 1-split scan and serialize its first stage
         # (the exploded-digest map work). On a cluster the fingerprint
         # table is bucketed/sized by the pipeline; locally the file count
         # carries the parallelism.
         target = spark.sparkContext.defaultParallelism
-        hs.repartition(target).write.mode("overwrite").parquet(path)
-        # The write consumed the build's persisted projection; drop only
-        # intermediates appended by THIS build.
-        release_since(mark)
-        _HS_CACHE[key] = path
-        record("shingle_hs", time.time() - t0)
-    return spark.read.parquet(path)
+        hs.repartition(target).write.mode("overwrite").parquet(
+            os.path.join(root, "hs.parquet")
+        )
+
+    root = materialize(
+        spark, sf_dir, "shingle_hs", ("documents",), (shingle_k,), build
+    )
+    return spark.read.parquet(os.path.join(root, "hs.parquet"))
 
 
 def minhash_lsh_pairs(
@@ -1284,9 +1220,6 @@ def prefix_filter_pairs_from_hs(
     return _verify_jaccard(candidates, docs.select("__id", "__hs"), threshold)
 
 
-_PREFIX_PAIRS_CACHE: dict[tuple, str] = {}
-
-
 def prefix_filter_pairs_shared(
     spark, sf_dir: str, *, shingle_k: int = 3, threshold: float = 0.3
 ) -> DataFrame:
@@ -1304,30 +1237,24 @@ def prefix_filter_pairs_shared(
     — the shared-kNN-build shape)."""
     import os
 
-    key = (
-        os.path.abspath(sf_dir),
-        dataset_fingerprint(sf_dir, "documents"),
-        shingle_k,
-        str(threshold),
-    )
-    path = _PREFIX_PAIRS_CACHE.get(key)
-    if path is None or not os.path.isdir(path):
-        import time
+    from sql_engine_spark.sharedcost import materialize
 
-        from sql_engine_spark.sharedcost import record
-
-        t0 = time.time()
-        mark = cache_mark()
+    def build(root: str) -> None:
         pairs = prefix_filter_pairs_from_hs(
             shingle_hs_shared(spark, sf_dir, shingle_k=shingle_k),
             threshold=threshold,
         )
-        path = os.path.join(tracked_tmpdir("sqe_prefix_pairs_"), "pairs.parquet")
-        pairs.write.mode("overwrite").parquet(path)
-        release_since(mark)
-        _PREFIX_PAIRS_CACHE[key] = path
-        record("prefix_pairs", time.time() - t0)
-    return spark.read.parquet(path)
+        pairs.write.mode("overwrite").parquet(os.path.join(root, "pairs.parquet"))
+
+    root = materialize(
+        spark,
+        sf_dir,
+        "prefix_pairs",
+        ("documents",),
+        (shingle_k, str(threshold)),
+        build,
+    )
+    return spark.read.parquet(os.path.join(root, "pairs.parquet"))
 
 
 def sql_prefix_filter_pairs(

@@ -404,9 +404,10 @@ KNN_K = 5
 # orientation (triangle_corner_counts above) is exact at O(m^1.5).
 WEDGE_CAP = 32
 
-# (abspath(sf_dir), dataset fingerprint, planes, tables, dim, k) ->
-# parquet path, process-local.
-_KNN_CACHE: dict[tuple, str] = {}
+def _knn_params(sf_dir: str) -> tuple:
+    """The shared kNN graph's build parameters — the validity-key params
+    of both the graph and the triangle relation derived from it."""
+    return (derived_graph_planes(sf_dir), KNN_TABLES, KNN_DIM, KNN_K)
 
 
 def knn_graph_shared(spark, sf_dir: str, *, k: int = KNN_K) -> DataFrame:
@@ -419,67 +420,35 @@ def knn_graph_shared(spark, sf_dir: str, *, k: int = KNN_K) -> DataFrame:
     if k > KNN_K:
         raise ValueError(f"k={k} exceeds the shared build's KNN_K={KNN_K}")
     from sql_engine_spark.io import load
-    from sql_engine_spark.operators.dedup import (
-        cache_mark,
-        dataset_fingerprint,
-        release_since,
-        tracked_tmpdir,
-    )
     from sql_engine_spark.operators.similarity import knn_graph
+    from sql_engine_spark.sharedcost import materialize
 
-    planes = derived_graph_planes(sf_dir)
-    key = (
-        os.path.abspath(sf_dir),
-        dataset_fingerprint(sf_dir, "embeddings"),
-        planes,
-        KNN_TABLES,
-        KNN_DIM,
-        KNN_K,
-    )
-    path = _KNN_CACHE.get(key)
-    if path is None or not os.path.isdir(path):
-        import time
+    params = _knn_params(sf_dir)
 
-        from sql_engine_spark.sharedcost import record
-
-        t0 = time.time()
+    def build(root: str) -> None:
         emb = load(spark, sf_dir, "embeddings")
-        mark = cache_mark()
         g = knn_graph(
             emb,
             id_col="vec_id",
             vec_col="embedding",
-            planes=planes,
+            planes=params[0],
             tables=KNN_TABLES,
             dim=KNN_DIM,
             k=KNN_K,
         )
-        path = os.path.join(tracked_tmpdir("sqe_knn_"), "knn.parquet")
-        g.write.mode("overwrite").parquet(path)
-        # The write action fully consumed the build's persisted
-        # intermediates; drop ONLY those (a calling operator may have
-        # live persists of its own below `mark`).
-        release_since(mark)
-        _KNN_CACHE[key] = path
-        record("knn_graph", time.time() - t0)
-    g = spark.read.parquet(path)
+        g.write.mode("overwrite").parquet(os.path.join(root, "knn.parquet"))
+
+    root = materialize(spark, sf_dir, "knn_graph", ("embeddings",), params, build)
+    g = spark.read.parquet(os.path.join(root, "knn.parquet"))
     if k < KNN_K:
         g = g.where(F.col("rank") <= k)
     return g
 
 
-# (abspath(sf_dir), dataset fingerprint, knn params) -> parquet path of
-# the triangle-triples relation, process-local. Round-8's last unshared
-# expensive derived relation (r8 verdict #2): four consumers each re-ran
-# the degree-ordered enumeration (~10s of the extension bench, the same
-# redundant O(m^1.5) at scale).
-_TRI_CACHE: dict[tuple, str] = {}
-
-
 def triangle_triples_shared(spark, sf_dir: str) -> DataFrame:
     """One row (x, y, z) per triangle of the SHARED kNN graph's
     undirected edge set, built once per (process, dataset) and
-    materialized to parquet — the SURVEY 7.6 shared-build template
+    materialized to parquet — the sharedcost.materialize template
     applied to the closed-wedge family. The enumeration is a pure
     function of (dataset, knn params); on a real cluster it is the
     triangle table written by the pipeline's graph stage, and the four
@@ -488,38 +457,18 @@ def triangle_triples_shared(spark, sf_dir: str) -> DataFrame:
     O(m^1.5) wedge join each."""
     import os
 
-    from sql_engine_spark.operators.dedup import (
-        _persist,
-        cache_mark,
-        dataset_fingerprint,
-        release_since,
-        tracked_tmpdir,
-    )
+    from sql_engine_spark.operators.dedup import _persist
+    from sql_engine_spark.sharedcost import materialize
 
-    key = (
-        os.path.abspath(sf_dir),
-        dataset_fingerprint(sf_dir, "embeddings"),
-        derived_graph_planes(sf_dir),
-        KNN_TABLES,
-        KNN_DIM,
-        KNN_K,
-    )
-    path = _TRI_CACHE.get(key)
-    if path is None or not os.path.isdir(path):
-        import time
-
-        from sql_engine_spark.sharedcost import record
-
-        t0 = time.time()
-        mark = cache_mark()
+    def build(root: str) -> None:
         und = _persist(und_edges(knn_graph_shared(spark, sf_dir)))
         tri = triangle_triples(und)
-        path = os.path.join(tracked_tmpdir("sqe_tri_"), "triangles.parquet")
-        tri.write.mode("overwrite").parquet(path)
-        release_since(mark)
-        _TRI_CACHE[key] = path
-        record("triangles", time.time() - t0)
-    return spark.read.parquet(path)
+        tri.write.mode("overwrite").parquet(os.path.join(root, "triangles.parquet"))
+
+    root = materialize(
+        spark, sf_dir, "triangles", ("embeddings",), _knn_params(sf_dir), build
+    )
+    return spark.read.parquet(os.path.join(root, "triangles.parquet"))
 
 
 def triangle_corner_counts_shared(spark, sf_dir: str) -> DataFrame:
@@ -622,32 +571,14 @@ def sql_knn_shared(*, k: int = KNN_K) -> str:
     return f"__KNN_SHARED_K{k}__"
 
 
-# abspath(sf_dir) -> embeddings row count (footer-driven, process-local)
-_EMB_COUNT_CACHE: dict[str, int] = {}
-
-
-def _emb_count(sf_dir: str) -> int:
-    import os
-
-    key = os.path.abspath(sf_dir)
-    n = _EMB_COUNT_CACHE.get(key)
-    if n is None:
-        import duckdb
-
-        n = duckdb.sql(
-            f"SELECT COUNT(*) FROM '{sf_dir}/embeddings.parquet'"
-        ).fetchone()[0]
-        _EMB_COUNT_CACHE[key] = n
-    return n
-
-
 def derived_graph_planes(sf_dir: str) -> int:
     """The shared graph's plane count for a dataset: derived_planes of
     the embeddings row count (parquet-footer COUNT — metadata, not a
     row pass). Both engines call THIS, never count independently."""
+    from sql_engine_spark.io import table_row_count
     from sql_engine_spark.operators.similarity import derived_planes
 
-    return derived_planes(_emb_count(sf_dir))
+    return derived_planes(table_row_count(sf_dir, "embeddings"))
 
 
 def render_knn_shared_sql(sf_dir: str, *, k: int = KNN_K) -> str:

@@ -89,42 +89,17 @@ def sql_inverted_index(max_df: int | None = None, source: str = "documents") -> 
 BM25_K1 = 1.2
 BM25_B = 0.75
 
-# (abspath(sf_dir), dataset fingerprint) -> index dir, process-local —
-# the SURVEY 7.6 shared-build template applied to retrieval BEFORE the
-# family grows (r8 verdict #8: build the index once, don't refactor
-# after, as was needed for the graph family).
-_BM25_IDX_CACHE: dict[tuple, str] = {}
-
-
-def bm25_index_shared(spark: SparkSession, sf_dir: str):
-    """The retrieval index over `{sf_dir}/documents`, built ONCE per
-    (process, dataset) and materialized to parquet: the postings
-    relation tf = (doc_id, token, tf, dl) and the doc-stats relation
-    docs = (doc_id, dl). A pure function of the corpus — on a real
-    cluster these are the index tables a pipeline's indexing stage
-    writes (bucketed by token and doc respectively); locally a temp
-    dir carries the same contract. Returns (tf_df, docstats_df)."""
+def _bm25_index_root(spark: SparkSession, sf_dir: str) -> str:
+    """Root of the materialized retrieval index over `{sf_dir}/documents`:
+    tf.parquet, docs.parquet and tokens.parquet."""
     import os
 
     from sql_engine_spark.io import load
-    from sql_engine_spark.operators.dedup import (
-        cache_mark,
-        dataset_fingerprint,
-        release_since,
-        tracked_tmpdir,
-    )
-    from sql_engine_spark.sharedcost import record
+    from sql_engine_spark.operators.dedup import _persist
+    from sql_engine_spark.sharedcost import materialize
 
-    key = (os.path.abspath(sf_dir), dataset_fingerprint(sf_dir, "documents"))
-    root = _BM25_IDX_CACHE.get(key)
-    if root is None or not os.path.isdir(root):
-        import time
-
-        from sql_engine_spark.operators.dedup import _persist
-
-        t0 = time.time()
+    def build(root: str) -> None:
         docs = load(spark, sf_dir, "documents")
-        mark = cache_mark()
         # A repartition(defaultParallelism) before the tokenize (the
         # narrow-file widening rule) was tried in r12 and measured FLAT
         # (6.3s vs 6.8s cold build either way at sf0.1): the build wall
@@ -142,7 +117,6 @@ def bm25_index_shared(spark: SparkSession, sf_dir: str):
             .groupBy("doc_id", "token")
             .agg(F.count("*").cast("long").alias("tf"), F.first("dl").alias("dl"))
         )
-        root = tracked_tmpdir("sqe_bm25idx_")
         target = spark.sparkContext.defaultParallelism
         tf.repartition(target).write.mode("overwrite").parquet(
             os.path.join(root, "tf.parquet")
@@ -157,18 +131,25 @@ def bm25_index_shared(spark: SparkSession, sf_dir: str):
         base.select(
             "doc_id", F.col("__t").alias("t"), "dl"
         ).write.mode("overwrite").parquet(os.path.join(root, "tokens.parquet"))
-        release_since(mark)
-        _BM25_IDX_CACHE[key] = root
-        record("bm25_index", time.time() - t0)
+
+    return materialize(spark, sf_dir, "bm25_index", ("documents",), (), build)
+
+
+def bm25_index_shared(spark: SparkSession, sf_dir: str):
+    """The retrieval index over `{sf_dir}/documents`, built ONCE per
+    (process, dataset) and materialized to parquet: the postings
+    relation tf = (doc_id, token, tf, dl) and the doc-stats relation
+    docs = (doc_id, dl). A pure function of the corpus — on a real
+    cluster these are the index tables a pipeline's indexing stage
+    writes (bucketed by token and doc respectively); locally a temp
+    dir carries the same contract. Returns (tf_df, docstats_df)."""
+    import os
+
+    root = _bm25_index_root(spark, sf_dir)
     return (
         spark.read.parquet(os.path.join(root, "tf.parquet")),
         spark.read.parquet(os.path.join(root, "docs.parquet")),
     )
-
-
-# name -> parquet path of a first-pass ranking table, process-local
-# (keyed like _BM25_IDX_CACHE: abspath + dataset fingerprint + name).
-_RANKED_CACHE: dict[tuple, str] = {}
 
 
 def ranked_shared(spark: SparkSession, sf_dir: str, name: str, build):
@@ -186,35 +167,17 @@ def ranked_shared(spark: SparkSession, sf_dir: str, name: str, build):
     so scanned scores equal the in-plan pipeline's bit for bit. Cold
     build cost lands in the shared_builds ledger (bench line items)."""
     import os
-    import time
 
-    from sql_engine_spark.operators.dedup import (
-        cache_mark,
-        dataset_fingerprint,
-        release_since,
-        tracked_tmpdir,
-    )
-    from sql_engine_spark.sharedcost import record
+    from sql_engine_spark.sharedcost import materialize
 
-    key = (
-        os.path.abspath(sf_dir),
-        dataset_fingerprint(sf_dir, "documents"),
-        name,
-    )
-    path = _RANKED_CACHE.get(key)
-    if path is None or not os.path.isdir(path):
-        t0 = time.time()
-        mark = cache_mark()
-        ranked = build()
-        path = os.path.join(
-            tracked_tmpdir(f"sqe_rank_{name}_"), "ranked.parquet"
-        )
+    def write(root: str) -> None:
         # k rows per house query — one file, one scan split is right.
-        ranked.coalesce(1).write.mode("overwrite").parquet(path)
-        release_since(mark)
-        _RANKED_CACHE[key] = path
-        record(f"rank_{name}", time.time() - t0)
-    return spark.read.parquet(path)
+        build().coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(root, "ranked.parquet")
+        )
+
+    root = materialize(spark, sf_dir, f"rank_{name}", ("documents",), (), write)
+    return spark.read.parquet(os.path.join(root, "ranked.parquet"))
 
 
 def token_arrays_shared(spark: SparkSession, sf_dir: str):
@@ -227,17 +190,7 @@ def token_arrays_shared(spark: SparkSession, sf_dir: str):
     indexing-stage pass no matter how many rankers run."""
     import os
 
-    from sql_engine_spark.operators.dedup import dataset_fingerprint
-
-    bm25_index_shared(spark, sf_dir)
-    # Same (abspath, dataset-fingerprint) key bm25_index_shared caches
-    # under — a path whose dataset changed mid-process misses here and
-    # the rebuild above re-registers, instead of a path-only scan
-    # returning whichever stale root was inserted first.
-    key = (os.path.abspath(sf_dir), dataset_fingerprint(sf_dir, "documents"))
-    root = _BM25_IDX_CACHE.get(key)
-    if root is None or not os.path.isdir(root):
-        raise RuntimeError("bm25_index_shared did not register an index root")
+    root = _bm25_index_root(spark, sf_dir)
     return spark.read.parquet(os.path.join(root, "tokens.parquet"))
 
 

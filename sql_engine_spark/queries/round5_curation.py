@@ -283,10 +283,10 @@ def ann_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "footer stats.",
 )
 def scan_partitioned_write_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
+    from sql_engine_spark.sharedcost import tracked_tmpdir
 
     ev = load(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="part_events_")
+    out = tracked_tmpdir("part_events_")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
     return (
         spark.read.parquet(out)

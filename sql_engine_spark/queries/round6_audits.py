@@ -429,12 +429,11 @@ _ZO_CUST_LO, _ZO_CUST_HI = 100, 400
     "tests/test_r6_ops.py pins that pruning actually drops files.",
 )
 def scan_zorder_multicol_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
+    from sql_engine_spark.sharedcost import tracked_tmpdir
     from sql_engine_spark.sinks import write_zordered
 
     orders = load(spark, sf_dir, "orders")
-    path = tempfile.mkdtemp(prefix="zorder_orders_")
+    path = tracked_tmpdir("zorder_orders_")
     write_zordered(
         orders, path, cols=("o_totalprice", "o_custkey"), n_files=8
     )

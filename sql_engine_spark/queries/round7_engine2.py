@@ -17,14 +17,13 @@ values); no doubles beyond single divisions of exact integers.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sql_engine_spark.io import load
 from sql_engine_spark.registry import register
+from sql_engine_spark.sharedcost import tracked_tmpdir
 
 
 def _li_bucket_sql(where: str) -> str:
@@ -238,7 +237,7 @@ def window_ignore_nulls_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="schema_evo_")
+    out = tracked_tmpdir("schema_evo_")
     docs.where(F.col("doc_id") % 2 == 0).select("doc_id", "lang").write.mode(
         "overwrite"
     ).parquet(out + "/v1")

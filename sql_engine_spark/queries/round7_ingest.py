@@ -15,8 +15,6 @@ driver tables, so the oracle derives the same facts relationally.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -24,6 +22,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from sql_engine_spark.functions.numeric import dsum, sql_dsum
 from sql_engine_spark.io import load
 from sql_engine_spark.registry import register
+from sql_engine_spark.sharedcost import tracked_tmpdir
 
 _CORRUPT_MOD = 25
 
@@ -55,7 +54,7 @@ _CORRUPT_MOD = 25
 )
 def scan_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="corrupt_json_")
+    out = tracked_tmpdir("corrupt_json_")
     lines = docs.select(
         F.when(
             F.col("doc_id") % _CORRUPT_MOD == 0,
@@ -121,7 +120,7 @@ def scan_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
-    out = tempfile.mkdtemp(prefix="dyn_overwrite_")
+    out = tracked_tmpdir("dyn_overwrite_")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
     corrected = ev.where(F.col("event_type") == "click").withColumn(
         "value", F.col("value") * 2.0

@@ -11,14 +11,13 @@ Hamming distances are exact bit_count(xor) integers.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sql_engine_spark.functions.numeric import dsum, sql_ssum, ssum
 from sql_engine_spark.io import load
 from sql_engine_spark.registry import _REGISTRY, register
+from sql_engine_spark.sharedcost import tracked_tmpdir
 
 _ECE_BINS = 10
 _ECE_SCALE = "1000000000.0"
@@ -151,7 +150,7 @@ def scan_manifest_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     od = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    root = tempfile.mkdtemp(prefix="time_travel_")
+    root = tracked_tmpdir("time_travel_")
     snap0 = os.path.join(root, "snap-0")
     snap1 = os.path.join(root, "snap-1")
     od.where(F.col("o_orderkey") % 3 != 0).write.mode("overwrite").parquet(snap0)

@@ -138,12 +138,6 @@ def multimodal_phash_dct(spark: SparkSession, sf_dir: str) -> DataFrame:
 # with identical bytes, so the duplicate leg is exercised in data.
 _COPY_OFFSET = 1_000_000
 
-# (abspath(sf_dir), dataset fingerprint) -> parquet path, process-local
-# (the SURVEY 7.6 shared-build template, same discipline as
-# operators/graph._KNN_CACHE).
-_PHASH_CACHE: dict[tuple, str] = {}
-
-
 def _parquet_max_doc_id(sf_dir: str) -> int | None:
     """max(doc_id) of `{sf_dir}/documents.parquet` from the parquet
     FOOTER column statistics — no Spark job. None when statistics are
@@ -206,21 +200,9 @@ def phash_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from sql_engine_spark.io import load
-    from sql_engine_spark.operators.dedup import (
-        cache_mark,
-        dataset_fingerprint,
-        release_since,
-        tracked_tmpdir,
-    )
+    from sql_engine_spark.sharedcost import materialize
 
-    key = (os.path.abspath(sf_dir), dataset_fingerprint(sf_dir, "documents"))
-    path = _PHASH_CACHE.get(key)
-    if path is None or not os.path.isdir(path):
-        import time
-
-        from sql_engine_spark.sharedcost import record
-
-        t0 = time.time()
+    def build(root: str) -> None:
         docs = load(spark, sf_dir, "documents").select("doc_id", "text")
         # The augmentation (and multimodal_phash_dct's sub-offset slice)
         # assumes real doc_ids sit below _COPY_OFFSET; on a dataset
@@ -236,16 +218,11 @@ def phash_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
         copies = docs.where(F.col("doc_id") % 25 == 0).select(
             (F.col("doc_id") + _COPY_OFFSET).alias("doc_id"), "text"
         )
-        mark = cache_mark()
         ph = phash_frame(spark, docs.unionAll(copies))
-        path = os.path.join(tracked_tmpdir("sqe_phash_"), "phash.parquet")
-        ph.write.mode("overwrite").parquet(path)
-        # The write consumed the build's persisted coefficient relation;
-        # drop only intermediates appended by THIS build.
-        release_since(mark)
-        _PHASH_CACHE[key] = path
-        record("phash", time.time() - t0)
-    return spark.read.parquet(path)
+        ph.write.mode("overwrite").parquet(os.path.join(root, "phash.parquet"))
+
+    root = materialize(spark, sf_dir, "phash", ("documents",), (), build)
+    return spark.read.parquet(os.path.join(root, "phash.parquet"))
 
 
 def phash_frame(spark: SparkSession, docs: DataFrame) -> DataFrame:

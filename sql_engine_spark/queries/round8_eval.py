@@ -305,13 +305,6 @@ def events_gini_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-# (abspath(sf_dir), dataset fingerprint) -> table-directory root: the
-# snapshot state is a pure function of the dataset, so it is built ONCE
-# per process (the shared-build cache discipline — repeated
-# bench/oracle/test cycles otherwise each leave two full copies of
-# orders in tmp; tracked_tmpdir sweeps the roots at exit).
-_EXPIRY_CACHE: dict[tuple, str] = {}
-
 _EXPIRY_FILES = ["f0", "f1", "f2", "f01"]
 
 
@@ -330,16 +323,10 @@ def expiry_fixture_root(spark: SparkSession, sf_dir: str) -> str:
     import json
     import os
 
-    from sql_engine_spark.operators.dedup import (
-        dataset_fingerprint,
-        tracked_tmpdir,
-    )
+    from sql_engine_spark.sharedcost import materialize
 
-    key = (os.path.abspath(sf_dir), dataset_fingerprint(sf_dir, "orders"))
-    root = _EXPIRY_CACHE.get(key)
-    if root is None or not os.path.isdir(root):
+    def build(root: str) -> None:
         od = load(spark, sf_dir, "orders").select("o_orderkey")
-        root = tracked_tmpdir("snap_expiry_")
         parts = {
             "f0": F.col("o_orderkey") % 3 == 0,
             "f1": F.col("o_orderkey") % 3 == 1,
@@ -357,9 +344,8 @@ def expiry_fixture_root(spark: SparkSession, sf_dir: str) -> str:
         }
         with open(os.path.join(root, "manifest.json"), "w") as f:
             json.dump(manifest, f)
-        _EXPIRY_CACHE[key] = root
-    return root
 
+    return materialize(spark, sf_dir, "snap_expiry", ("orders",), (), build)
 
 
 @register(

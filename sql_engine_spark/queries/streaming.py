@@ -729,8 +729,9 @@ def streaming_materialized_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sql_engine_spark.streaming.fleet import fleet_view
 
     view = fleet_view(spark, sf_dir, "streaming_materialized_agg")
-    # The view directory persists for the process lifetime (mkdtemp is
-    # not auto-cleaned), so the result reads lazily like any table.
+    # The view directory persists for the process lifetime (a
+    # tracked_tmpdir, swept at exit), so the result reads lazily like
+    # any table.
     return view.read(spark).select(
         "event_type", "n", F.col("__dsum").cast("double").alias("sum_value")
     )

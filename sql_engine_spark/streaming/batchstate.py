@@ -158,11 +158,11 @@ def batchstate_fleet_view(spark: SparkSession, sf_dir: str, name: str) -> DataFr
     import os as _os
     import time
 
-    from sql_engine_spark.operators.dedup import (
+    from sql_engine_spark.sharedcost import (
         dataset_fingerprint,
+        record,
         tracked_tmpdir,
     )
-    from sql_engine_spark.sharedcost import record
     from sql_engine_spark.streaming.source import table_stream
 
     if name not in _FLEET_SPECS:
@@ -229,7 +229,7 @@ def run_batchstate(
 ) -> DataFrame:
     """Drain `stream_df` (a bounded availableNow replay) through `step`
     and return the union of every batch's committed output."""
-    from sql_engine_spark.operators.dedup import tracked_tmpdir
+    from sql_engine_spark.sharedcost import tracked_tmpdir
 
     out_root = tracked_tmpdir(f"bstate_out_{name}_")
     handle, schemas = batchstate_handler(

@@ -100,10 +100,7 @@ def fleet_view(spark: SparkSession, sf_dir: str, name: str):
     """The drained IdempotentMatView for `name`, running the shared
     replay pass for its source table if this (process, dataset) hasn't
     drained it yet."""
-    from sql_engine_spark.operators.dedup import (
-        dataset_fingerprint,
-        tracked_tmpdir,
-    )
+    from sql_engine_spark.sharedcost import dataset_fingerprint, tracked_tmpdir
     from sql_engine_spark.queries.streaming import _state_partitions
     from sql_engine_spark.streaming.matview import IdempotentMatView
     from sql_engine_spark.streaming.source import table_stream

@@ -10,15 +10,16 @@ identical (that is the point of the unified batch/stream API).
 from __future__ import annotations
 
 import os
-import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 
 from sql_engine_spark.io import load
+from sql_engine_spark.sharedcost import dataset_fingerprint, tracked_tmpdir
 
 
-_REPLAY_DIRS: dict[tuple[str, str, tuple[str, ...], int], str] = {}
+# (abspath(sf_dir), table, order, chunks, dataset fingerprint) -> dir.
+_REPLAY_DIRS: dict[tuple, str] = {}
 
 
 def events_stream(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> DataFrame:
@@ -40,8 +41,14 @@ def table_stream(
 ) -> DataFrame:
     """readStream replay of any testdata table, chunked in `order_cols`
     order, one chunk per micro-batch trigger."""
-    key = (sf_dir, table, tuple(order_cols), n_chunks)
-    if key in _REPLAY_DIRS:
+    key = (
+        os.path.abspath(sf_dir),
+        table,
+        tuple(order_cols),
+        n_chunks,
+        dataset_fingerprint(sf_dir, table),
+    )
+    if os.path.isdir(_REPLAY_DIRS.get(key, "")):
         schema = load(spark, sf_dir, table).schema
         return (
             spark.readStream.schema(schema)
@@ -75,7 +82,7 @@ def table_replay_chunks(
     from sql_engine_spark.sharedcost import record
 
     t0 = time.time()
-    out_dir = out_dir or tempfile.mkdtemp(prefix=f"{table}_replay_")
+    out_dir = out_dir or tracked_tmpdir(f"{table}_replay_")
     src = load(spark, sf_dir, table)
     # Range-partition by the replay order: part-00000 holds the earliest
     # rows, and the file source's (modtime, path) ordering then replays
@@ -127,8 +134,6 @@ def sentinel_replay_dir(
     sentinels (capture list_part_files first, then stamp_files_last)
     and returns any derived payload (e.g. max ts) to cache alongside.
     """
-    from sql_engine_spark.operators.dedup import dataset_fingerprint
-
     key = (
         os.path.abspath(sf_dir),
         table,
@@ -187,7 +192,7 @@ def run_to_memory(stream_df: DataFrame, name: str, output_mode: str) -> DataFram
     """Drain a bounded stream into an in-memory table and return it as a
     batch DataFrame (test/driver harness; a production job would use a
     parquet/Kafka sink with a real trigger)."""
-    checkpoint = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
+    checkpoint = tracked_tmpdir(f"ckpt_{name}_")
     q = (
         stream_df.writeStream.format("memory")
         .queryName(name)

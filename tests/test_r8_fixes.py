@@ -128,14 +128,16 @@ def test_clustering_coefficient_matches_naive_on_hub_graph(spark):
 
 
 def test_knn_graph_shared_builds_once_per_dataset(spark, sf_dir):
-    from sql_engine_spark.operators.graph import _KNN_CACHE, knn_graph_shared
+    from urllib.parse import urlparse
+
+    from sql_engine_spark.operators.graph import knn_graph_shared
 
     g1 = knn_graph_shared(spark, sf_dir)
-    key = [k for k in _KNN_CACHE if k[0] == os.path.abspath(sf_dir)]
-    assert key, "first call must register the materialized relation"
-    path = _KNN_CACHE[key[0]]
+    path = os.path.dirname(urlparse(g1.inputFiles()[0]).path)
+    assert os.path.basename(path) == "knn.parquet"
     mtime = os.path.getmtime(path)
     g2 = knn_graph_shared(spark, sf_dir)
+    assert g2.inputFiles() == g1.inputFiles()  # same materialized relation
     assert os.path.getmtime(path) == mtime  # no rebuild
     assert g1.count() == g2.count()
     # k<KNN_K is a rank filter on the SAME relation

@@ -16,15 +16,16 @@ def _build(spark, sf_dir, name):
 
 def test_graph_ops_scan_shared_knn_relation(spark, sf_dir):
     """After the first build, every graph operator's plan reads the
-    cached kNN parquet (one FileScan of the sqe_knn_ path) and contains
+    cached kNN parquet (one FileScan of the sqe_knn_graph_ root) and contains
     NONE of the LSH-construction signatures (the `stack(` bucket
     unpivot / plane-literal aggregate) that round 7 plans carried in
     every graph query."""
-    from sql_engine_spark.operators.graph import _KNN_CACHE, knn_graph_shared
+    from sql_engine_spark.operators.graph import knn_graph_shared
 
-    knn_graph_shared(spark, sf_dir)  # prime the cache
-    key = [k for k in _KNN_CACHE if k[0] == os.path.abspath(sf_dir)]
-    path = _KNN_CACHE[key[0]]
+    # prime the cache; the materialized root is the scan's grandparent dir
+    files = knn_graph_shared(spark, sf_dir).inputFiles()
+    root = os.path.basename(os.path.dirname(os.path.dirname(files[0])))
+    assert root.startswith("sqe_knn_graph_"), root
     for name in (
         "graph_modularity",
         "graph_clustering_coefficient",
@@ -37,7 +38,7 @@ def test_graph_ops_scan_shared_knn_relation(spark, sf_dir):
     ):
         spark.catalog.clearCache()
         plan = explain_str(_build(spark, sf_dir, name), "formatted")
-        assert os.path.basename(path) in plan or "sqe_knn_" in plan, name
+        assert root in plan, name
         assert "stack(4, 0, __b0" not in plan, f"{name} rebuilds the LSH tables"
 
 
@@ -58,7 +59,7 @@ def test_shared_build_prunes_k_filter(spark, sf_dir):
     spark.catalog.clearCache()
     edges = knn_graph_shared(spark, sf_dir, k=3).select("src", "dst")
     plan = explain_str(edges, "formatted")
-    assert "sqe_knn_" in plan
+    assert "sqe_knn_graph_" in plan
     assert re.search(r"PushedFilters:.*rank.*3|PushedFilters:.*LessThanOrEqual\(rank,3\)", plan), (
         plan[:3000]
     )

@@ -19,16 +19,12 @@ def test_phash_consumers_scan_shared_relation(spark, sf_dir):
     """After the first build, every pHash operator's plan reads the
     cached fingerprint parquet and contains NO mapInPandas grid stage
     (the Python decode runs once, at build time)."""
-    from sql_engine_spark.queries.round7_multimodal2 import _PHASH_CACHE, phash_shared
+    from sql_engine_spark.queries.round7_multimodal2 import phash_shared
 
-    phash_shared(spark, sf_dir)  # prime the cache
-    # Cache keys are (abspath, dataset_fingerprint) since the r9
-    # hardening — match on the path component.
-    path = next(
-        v
-        for k, v in _PHASH_CACHE.items()
-        if (k[0] if isinstance(k, tuple) else k) == os.path.abspath(sf_dir)
-    )
+    # prime the cache; the materialized root is the scan's grandparent dir
+    files = phash_shared(spark, sf_dir).inputFiles()
+    root = os.path.basename(os.path.dirname(os.path.dirname(files[0])))
+    assert root.startswith("sqe_phash_"), root
     for name in (
         "multimodal_phash_dct",
         "multimodal_phash_near_dup",
@@ -36,7 +32,7 @@ def test_phash_consumers_scan_shared_relation(spark, sf_dir):
     ):
         spark.catalog.clearCache()
         plan = explain_str(_build(spark, sf_dir, name), "formatted")
-        assert os.path.basename(path) in plan or "sqe_phash_" in plan, name
+        assert root in plan, name
         assert "MapInPandas" not in plan, f"{name} rebuilds the DCT pipeline"
 
 
@@ -57,11 +53,12 @@ def test_minhash_consumers_scan_shared_hs_relation(spark, sf_dir):
     """Set-similarity operators over the full documents table must scan
     the materialized hashed-shingle relation — no tokenize/shingle
     signatures (the sentence-split regexp) in their plans."""
-    from sql_engine_spark.operators.dedup import _HS_CACHE, shingle_hs_shared
+    from sql_engine_spark.operators.dedup import shingle_hs_shared
 
-    shingle_hs_shared(spark, sf_dir)  # prime
-    key = [k for k in _HS_CACHE if k[0] == os.path.abspath(sf_dir)][0]
-    path = _HS_CACHE[key]
+    # prime; the materialized root is the scan's grandparent dir
+    files = shingle_hs_shared(spark, sf_dir).inputFiles()
+    root = os.path.basename(os.path.dirname(os.path.dirname(files[0])))
+    assert root.startswith("sqe_shingle_hs_"), root
     for name in (
         "dedup_minhash_lsh",
         "dedup_prefix_filter",
@@ -73,11 +70,7 @@ def test_minhash_consumers_scan_shared_hs_relation(spark, sf_dir):
         # dedup_prefix_filter scans the one-level-up shared PAIR build
         # since r12 (prefix_filter_pairs_shared, itself built from the
         # hs relation) — that parquet scan is equally "no re-shingle".
-        assert (
-            os.path.basename(path) in plan
-            or "sqe_hs_" in plan
-            or "sqe_prefix_pairs_" in plan
-        ), name
+        assert root in plan or "sqe_prefix_pairs_" in plan, name
         # The tokenizer signature (split of lower(trim(...))) never
         # appears: shingling ran once, at build time. The sentinel is
         # the actual textprep.tokens spelling, not a regex the repo

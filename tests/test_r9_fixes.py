@@ -70,21 +70,32 @@ def test_shingle_cache_invalidates_on_dataset_change(spark, tmp_path):
     assert os.path.dirname(p1) != os.path.dirname(p3)
 
 
-def test_tracked_tmpdirs_are_registered_for_cleanup(spark):
-    from sql_engine_spark.operators import dedup as D
+def test_tracked_tmpdirs_are_registered_for_cleanup(spark, tmp_path):
+    from sql_engine_spark import sharedcost as S
+    from sql_engine_spark.streaming.source import run_to_memory
 
-    d = D.tracked_tmpdir("sqe_test_")
+    d = S.tracked_tmpdir("sqe_test_")
     assert os.path.isdir(d)
-    assert d in D._TMP_DIRS
+    assert d in S._TMP_DIRS
     # The atexit sweep is rmtree(ignore_errors=True) over _TMP_DIRS;
     # exercise the same call here.
     shutil.rmtree(d, ignore_errors=True)
     assert not os.path.isdir(d)
-    D._TMP_DIRS.remove(d)
+    S._TMP_DIRS.remove(d)
+
+    # The run_to_memory checkpoint dir is tracked the same way.
+    src = str(tmp_path / "src")
+    spark.range(3).write.parquet(src)
+    stream = spark.readStream.schema("id long").parquet(src)
+    before = set(S._TMP_DIRS)
+    assert run_to_memory(stream, "tracked_ckpt_probe", "append").count() == 3
+    added = [os.path.basename(p) for p in S._TMP_DIRS if p not in before]
+    assert len(added) == 1, added
+    assert added[0].startswith("ckpt_tracked_ckpt_probe_"), added
 
 
 def test_dataset_fingerprint_tracks_bytes_and_mtime(tmp_path):
-    from sql_engine_spark.operators.dedup import dataset_fingerprint
+    from sql_engine_spark.sharedcost import dataset_fingerprint
 
     sf = str(tmp_path)
     path = os.path.join(sf, "documents.parquet")

@@ -20,14 +20,12 @@ def test_triangle_consumers_scan_shared_relation(spark, sf_dir):
     cached triangle parquet and contains NONE of the wedge-enumeration
     signatures (the __vk orientation struct) that round 8 plans carried
     per consumer."""
-    from sql_engine_spark.operators.graph import (
-        _TRI_CACHE,
-        triangle_triples_shared,
-    )
+    from sql_engine_spark.operators.graph import triangle_triples_shared
 
-    triangle_triples_shared(spark, sf_dir)  # prime the cache
-    key = [k for k in _TRI_CACHE if k[0] == os.path.abspath(sf_dir)]
-    path = _TRI_CACHE[key[0]]
+    # prime the cache; the materialized root is the scan's grandparent dir
+    files = triangle_triples_shared(spark, sf_dir).inputFiles()
+    root = os.path.basename(os.path.dirname(os.path.dirname(files[0])))
+    assert root.startswith("sqe_triangles_"), root
     for name in (
         "graph_triangle_count",
         "graph_clustering_coefficient",
@@ -36,7 +34,7 @@ def test_triangle_consumers_scan_shared_relation(spark, sf_dir):
     ):
         spark.catalog.clearCache()
         plan = explain_str(_build(spark, sf_dir, name), "formatted")
-        assert os.path.basename(path) in plan or "sqe_tri_" in plan, name
+        assert root in plan, name
         assert "__vk" not in plan, f"{name} re-runs the wedge enumeration"
 
 

@@ -14,7 +14,7 @@ def _build(spark, sf_dir, name):
 
 
 def test_new_retrieval_ops_scan_shared_index(spark, sf_dir):
-    """nDCG and RM3 read the materialized index parquet ('sqe_bm25idx_'
+    """nDCG and RM3 read the materialized index parquet ('sqe_bm25_index_'
     temp root); the only allowed documents-table access is none at all
     — tokenization happened once at index-build time."""
     from sql_engine_spark.operators.retrieval import bm25_index_shared
@@ -23,7 +23,7 @@ def test_new_retrieval_ops_scan_shared_index(spark, sf_dir):
     for name in ("retrieval_ndcg_at10", "retrieval_rm3_expansion"):
         spark.catalog.clearCache()
         plan = explain_str(_build(spark, sf_dir, name), "formatted")
-        assert "sqe_bm25idx_" in plan, name
+        assert "sqe_bm25_index_" in plan, name
         assert "documents.parquet" not in plan, (
             f"{name} re-scans the corpus text instead of the index"
         )
